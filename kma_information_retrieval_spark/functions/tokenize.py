@@ -225,6 +225,22 @@ def term_position_entries(tokens: Column) -> Column:
     ).otherwise(_bind(F.array_sort(pairs), with_sorted))
 
 
+def int32_list_offsets(lengths) -> np.ndarray:
+    """Arrow list offsets (``[0, cumsum(lengths)...]``) as int32, the
+    offset width of Spark's ``array<...>`` columns. Summed in int64 and
+    checked: a batch whose lists hold 2^31 or more values in total
+    raises instead of wrapping into a corrupt array."""
+    import numpy as np
+
+    offs = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64)))
+    if offs[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"{int(offs[-1])} list values in one Arrow batch exceed int32 "
+            "offsets; lower spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return offs.astype(np.int32)
+
+
 def positional_entries_frame(
     tok_arrays: DataFrame, num_segments: int | None = None
 ) -> DataFrame:
@@ -260,6 +276,7 @@ def positional_entries_frame(
     def kernel(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         for rb in batches:
             nrows = rb.num_rows
@@ -293,13 +310,12 @@ def positional_entries_frame(
             tf = np.diff(np.concatenate((starts, [total])))
             doc_ids = doc.to_numpy()
             cols = [
-                pa.compute.take(enc.dictionary, pa.array(sc[starts])),
+                pc.take(enc.dictionary, pa.array(sc[starts])),
                 pa.array(doc_ids[sd[starts]], type=pa.int64()),
                 pa.array(tf, type=pa.int64()),
                 pa.array(lens[sd[starts]], type=pa.int64()),
                 pa.ListArray.from_arrays(
-                    pa.array(np.concatenate(([0], np.cumsum(tf))).astype(np.int32),
-                             type=pa.int32()),
+                    pa.array(int32_list_offsets(tf), type=pa.int32()),
                     pa.array(sp.astype(np.int32), type=pa.int32()),
                 ),
             ]

@@ -83,7 +83,7 @@ import os
 import time
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -856,12 +856,22 @@ def decoded_postings_frame(seg: DataFrame) -> DataFrame:
 
 @dataclass
 class SegmentIndex:
+    """A loaded index. Each table is read once, on first use, and the
+    resulting DataFrame serves every later request: reading a parquet
+    table resolves its file listing and infers its schema, and the
+    inference is a Spark job, so re-reading per request would launch
+    one job per table before any query runs."""
+
     spark: SparkSession
     out_dir: str
     meta: dict
+    _tables: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _bundle: object = field(default=None, init=False, repr=False, compare=False)
 
     def _table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.out_dir, name))
+        if name not in self._tables:
+            self._tables[name] = self.spark.read.parquet(os.path.join(self.out_dir, name))
+        return self._tables[name]
 
     def _has(self, name: str) -> bool:
         return os.path.isdir(os.path.join(self.out_dir, name))
@@ -918,6 +928,11 @@ class SegmentIndex:
         column-pruned away; if the index was built ``with_positions=
         False``, postings are decoded from the compressed segments
         instead (and phrase/proximity are unavailable)."""
+        if self._bundle is None:
+            self._bundle = self._make_bundle()
+        return self._bundle
+
+    def _make_bundle(self):
         from ..operators.boolean import IndexBundle
 
         pos = self.positional
@@ -968,18 +983,9 @@ class SegmentIndex:
         tables (same router as the in-memory path, J10-J13;
         ``strategy="intersect"`` = the reference's multi-index Medium
         tier)."""
-        from ..operators.boolean import IndexBundle, wildcard_terms
+        from ..operators.boolean import wildcard_terms
 
-        bundle = IndexBundle(
-            postings=None,
-            all_docs=None,
-            vocab=self.dictionary.select("term"),
-            trigrams=self.trigrams,
-            permuterm=self.permuterm,
-            grams2=self.grams2,
-            suffixes=self.suffixes,
-        )
-        return wildcard_terms(pattern, bundle, strategy=strategy)
+        return wildcard_terms(pattern, self.bundle(), strategy=strategy)
 
     def wildcard_topk(self, pattern: str, k: int = 10,
                       use_wand: bool = True) -> list[tuple[int, float]]:
@@ -1025,6 +1031,10 @@ class SegmentIndex:
 
 
 def load_index(spark: SparkSession, out_dir: str) -> SegmentIndex:
+    """Open the index written to ``out_dir``. The returned object is a
+    snapshot: each table's file listing is taken when the table is first
+    used and kept for the object's life, so an index rebuilt (or resumed)
+    into the same directory needs a fresh ``load_index``."""
     with open(os.path.join(out_dir, "manifest.json")) as f:
         meta = json.load(f)
     return SegmentIndex(spark, out_dir, meta)

@@ -55,3 +55,30 @@ def indexes(spark, docs):
     bundle.dictionary = dic
     bundle.doclen = ops.doc_lengths(toks).cache()
     return bundle
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> ``(fn(), names)``: the names of the Spark
+    jobs ``fn`` launched, read from the status store the way
+    ``perfbench/spans.py`` harvests stages. The store lists jobs newest
+    first; the listener bus is drained before every read."""
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        listed = store.jobsList(None)
+        return (listed.apply(i) for i in range(listed.size()))
+
+    def run(fn):
+        job0 = next((j.jobId() for j in jobs()), -1)
+        out = fn()
+        names = []
+        for j in jobs():
+            if j.jobId() <= job0:
+                break
+            names.append(j.name())
+        return out, names
+
+    return run

@@ -92,6 +92,28 @@ def test_strict_mode_raises_on_missing_term(pidx):
     assert _ids(pidx.query("zzzmissing or compute")) == _ids(pidx.query("compute"))
 
 
+# one query of each kind: term, AND, OR, NOT, phrase, near/k, wildcard
+PLAN_KINDS = ["compute", "compute and test", "compute or test", "not cat",
+              '"hello world"', "near/2(test compute)", "comp*"]
+
+
+def test_loaded_index_plans_without_jobs(pidx, spark_jobs):
+    """A loaded index reads each table once: after it has served a
+    request, planning any query kind launches no Spark job, and a repeated
+    top-k request launches no parquet schema-inference job."""
+    pidx.query("compute").collect()
+    for q in PLAN_KINDS:
+        _, jobs = spark_jobs(lambda: pidx.query(q))
+        assert jobs == [], (q, jobs)
+
+    def topk():
+        return bm25_topk_batch(pidx, {"q": ["compute", "test"]}, 10).collect()
+
+    topk()
+    _, jobs = spark_jobs(topk)
+    assert jobs and not [j for j in jobs if j.startswith("parquet at")], jobs
+
+
 def test_doc_partitioned_wand_matches_term_partitioned(pidx, docidx, oracle):
     queries = {
         "q1": ["compute", "test"],

@@ -274,6 +274,7 @@ def test_term_position_entries_matches_groupby(spark, docs):
     # tiny-batch path: a batch smaller than one doc's tokens never
     # occurs (batches are row-aligned), but multi-batch task streams do
     # — force 2-row batches and re-check
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
         c2 = positional_entries_frame(tok_arrays).select(
@@ -282,4 +283,4 @@ def test_term_position_entries_matches_groupby(spark, docs):
         assert c2.count() == a.count()
         assert a.exceptAll(c2).count() == 0
     finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

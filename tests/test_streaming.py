@@ -377,6 +377,12 @@ def _tiny_oracle(n=60, live=None):
     })
 
 
+def _assert_same_topk(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, rel_tol=1e-12)
+
+
 def test_delete_masks_boolean(del_gi):
     """Tombstoned docs vanish from boolean results immediately (anti-
     join path, no compaction needed)."""
@@ -406,6 +412,94 @@ def test_delete_masks_wildcard_topk(del_gi):
     """The distributed wildcard->BM25 path honors tombstones too."""
     rows = del_gi.wildcard_topk("doc*", 60).collect()
     assert rows and all(r["doc_id"] % 5 != 0 for r in rows)
+
+
+# one query of each kind: term, AND, OR, NOT, phrase, near/k, wildcard
+PLAN_KINDS = ["alpha", "alpha and doc1", "doc1 or doc2", "not doc3",
+              '"alpha beta"', "near/2(alpha gamma1)", "doc*"]
+
+
+def test_loaded_generations_plan_without_jobs(del_gi, spark_jobs):
+    """Each generation's tables are read once per loaded view and
+    tombstones are read with a fixed schema: after one request, planning
+    any query kind launches no Spark job, and a repeated top-k request
+    launches no parquet schema-inference job."""
+    del_gi.query("alpha").collect()
+    for q in PLAN_KINDS:
+        _, jobs = spark_jobs(lambda: del_gi.query(q))
+        assert jobs == [], (q, jobs)
+
+    def topk():
+        return del_gi.bm25_topk_batch({"q": ["doc1", "alpha"]}, 10).collect()
+
+    topk()
+    _, jobs = spark_jobs(topk)
+    assert jobs and not [j for j in jobs if j.startswith("parquet at")], jobs
+
+
+def test_delete_after_load_reaches_loaded_view(spark, tmp_path_factory):
+    """Tombstones are never memoised: ids deleted after
+    ``load_generations`` (and after the view has served requests) vanish
+    at once from the same view's boolean and BM25 results."""
+    from kma_information_retrieval_spark.streaming.incremental import delete_docs
+
+    out = str(tmp_path_factory.mktemp("delfresh") / "idx")
+    _tiny_gens(spark, out)
+    gi = load_generations(spark, out)
+    full = _tiny_oracle().bm25_topk(["doc1", "alpha"], 60)
+    _assert_same_topk(gi.bm25_topk(["doc1", "alpha"], 10), full[:10])
+    deleted: set[int] = set()
+    for ids in ([1, 8], [15, 2]):  # a second delete appends a second file
+        delete_docs(spark, out, ids)
+        deleted |= set(ids)
+        got = {r["doc_id"] for r in gi.query("alpha").collect()}
+        assert got == set(range(60)) - deleted
+        want = [(d, sc) for d, sc in full if d not in deleted][:10]
+        got_topk = gi.bm25_topk_batch({"q": ["doc1", "alpha"]}, 10).collect()
+        got_topk = sorted(((r["doc_id"], r["score"]) for r in got_topk),
+                          key=lambda x: (-x[1], x[0]))
+        _assert_same_topk(got_topk, want)
+
+
+def test_compaction_during_stream_keeps_every_doc(spark, tmp_path):
+    """The compacted generation takes a name no stream epoch can take:
+    stream 3 batches, compact, land a 4th batch, and every live doc is
+    still answerable (the compacted generation was not overwritten by
+    the next micro-batch)."""
+    from kma_information_retrieval_spark.streaming.incremental import (
+        compact_generations,
+    )
+
+    src, out = str(tmp_path / "incoming"), str(tmp_path / "idx")
+    schema = "doc_id long, content string"
+    batch = 20
+
+    def land(b):
+        spark.createDataFrame(
+            [(i, f"alpha beta doc{i % 7} gamma{i % 3} delta")
+             for i in range(b * batch, (b + 1) * batch)],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    land(0)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = incremental_index_stream(stream, out, num_segments=2)
+    try:
+        q.processAllAvailable()
+        for b in (1, 2):
+            land(b)
+            q.processAllAvailable()
+        assert len(load_generations(spark, out).gen_dirs) == 3
+        compact_generations(spark, out, num_segments=2)
+        land(3)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    gi = load_generations(spark, out)
+    assert len(gi.gen_dirs) == 2 and gi.n_docs == 4 * batch
+    assert {r["doc_id"] for r in gi.query("alpha").collect()} == set(range(4 * batch))
+    oi = _tiny_oracle(n=4 * batch)
+    _assert_same_topk(gi.bm25_topk(["doc1", "alpha"], 10), oi.bm25_topk(["doc1", "alpha"], 10))
 
 
 def test_delete_then_compact_refreshes_stats(spark, tmp_path_factory):

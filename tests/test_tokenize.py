@@ -3,9 +3,15 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
-from kma_information_retrieval_spark.functions.tokenize import bigrams_expr, tokenize_expr
+from kma_information_retrieval_spark.functions.tokenize import (
+    bigrams_expr,
+    int32_list_offsets,
+    tokenize_expr,
+)
 from kma_information_retrieval_spark.oracle import tokenize as py_tokenize
 
 
@@ -60,3 +66,13 @@ def test_bigrams_short_doc(spark):
     df = spark.createDataFrame([("single",), ("a b",)], "content string")
     got = [r["b"] for r in df.select(bigrams_expr(tokenize_expr("content")).alias("b")).collect()]
     assert got == [[], []]
+
+
+def test_int32_list_offsets_fail_loudly_past_int32():
+    """Arrow list offsets for Spark arrays are int32: a batch holding
+    2^31 or more values must raise, not wrap into a corrupt array."""
+    got = int32_list_offsets(np.array([2, 0, 3]))
+    assert got.dtype == np.int32 and got.tolist() == [0, 2, 2, 5]
+    assert int32_list_offsets(np.array([2**31 - 1]))[-1] == 2**31 - 1
+    with pytest.raises(OverflowError):
+        int32_list_offsets(np.array([2**30, 2**30]))
